@@ -3477,108 +3477,254 @@ def test_semantic_dedup_election_output_identical(spark, monkeypatch):
     assert got[1000] and not got[1001] and got[1002]
 
 
-def test_semantic_dedup_kernel_matches_jvm_path(spark):
-    """r13 optimization pin: the Arrow pair kernel
-    (similarity._bucket_drop_ids) computes the EXACT output of the
-    legacy all-JVM pair plan — including Spark's NaN-compares-greatest
-    semantics, zip_with null padding on ragged/null vectors, and the
-    when() 0.0 fallback for non-positive norms. The conf flip keeps
-    both paths permanently comparable."""
+# Golden outputs of the pair stage, captured from the all-JVM pair plan
+# (`dedup._emit_pairs` + `_cosine_from(_dot(...))`) that `_pair_kernel`
+# replaced. Cosines are IEEE-754 bit patterns (hex of the big-endian
+# double); 7ff8000000000000 is the NaN Spark writes.
+_NAN, _INF = float("nan"), float("inf")
+_ONE = "3ff0000000000000"
+_GOLDEN_SD_ROWS = [
+    (0, [1.0, 0.0, 0.0, 0.0]),
+    (1, [1.0, 0.0, 0.0, 0.0]),       # exact duplicate of 0
+    (2, [0.999, 0.01, 0.0, 0.0]),    # near-dup of 0
+    (3, None),                        # null vector -> cos 0.0
+    (4, [1.0, None, 0.0, 0.0]),      # null element -> null cos
+    (5, [_NAN, 0.0, 0.0, 0.0]),      # NaN norm/cos -> DROPS (NaN >= t)
+    (6, [0.0, 0.0, 0.0, 0.0]),       # zero norm -> cos 0.0
+    (7, [1.0, 0.0]),                 # ragged length -> null cos
+    (8, [_INF, 0.0, 0.0, 0.0]),      # inf norm
+    (9, [-1.0, 0.0, 0.0, 0.0]),      # anti-parallel
+    (10, [0.6, 0.8, 0.0, 0.0]),
+    (11, [_NAN, 0.0, 0.0, 0.0]),     # NaN pair with 5: cos NaN drops 11
+]
+_GOLDEN_CP_ROWS = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(30)] + [
+    (100, [0.0, 1.0, 0.0, 0.0]),
+    (101, [0.0, 0.999, 0.01, 0.0]),
+    (102, None),
+    (103, [1.0, None, 0.0, 0.0]),
+    (104, [_NAN, 0.0, 0.0, 0.0]),
+    (105, [0.0, 0.0, 0.0, 0.0]),
+    (106, [1.0, 0.0]),
+    (107, [0.6, 0.8, 0.0, 0.0]),
+]
+# one 15-member cluster holding a null vector, elected at onset 4
+_GOLDEN_EL_ROWS = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(6)] + [
+    (6, [0.999, 0.01, 0.0, 0.0]),
+    (7, None),
+    (8, [_NAN, 0.0, 0.0, 0.0]),
+    (9, [_NAN, 0.0, 0.0, 0.0]),
+    (10, [0.0, 0.0, 0.0, 0.0]),
+    (11, [0.0, 0.0, 0.0, 0.0]),
+    (12, [0.6, 0.8, 0.0, 0.0]),
+    (13, [0.6, 0.8, 0.0, 0.0]),
+    (14, [-1.0, 0.0, 0.0, 0.0]),
+]
+_GOLDEN_SCHEMA = "vec_id long, embedding array<float>"
+
+
+def _golden_dedup(spark, rows, **kw):
     from torcharrow_spark.operators.similarity import semantic_dedup
 
-    nan, inf = float("nan"), float("inf")
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [1.0, 0.0, 0.0, 0.0]),       # exact duplicate of 0
-        (2, [0.999, 0.01, 0.0, 0.0]),    # near-dup of 0
-        (3, None),                        # null vector -> cos 0.0
-        (4, [1.0, None, 0.0, 0.0]),      # null element -> null cos
-        (5, [nan, 0.0, 0.0, 0.0]),       # NaN norm/cos -> DROPS (NaN >= t)
-        (6, [0.0, 0.0, 0.0, 0.0]),       # zero norm -> cos 0.0
-        (7, [1.0, 0.0]),                 # ragged length -> null cos
-        (8, [inf, 0.0, 0.0, 0.0]),       # inf norm
-        (9, [-1.0, 0.0, 0.0, 0.0]),      # anti-parallel
-        (10, [0.6, 0.8, 0.0, 0.0]),
-        (11, [nan, 0.0, 0.0, 0.0]),      # NaN pair with 5: cos NaN drops 11
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
-
-    def run():
-        out = semantic_dedup(df, threshold=0.5, centroids=cents)
-        return sorted(
-            (r["vec_id"], r["cluster"], r["keep"]) for r in out.collect()
-        )
-
-    kernel = run()
-    spark.conf.set("spark.torcharrow.arrowPairKernels", "false")
-    try:
-        legacy = run()
-    finally:
-        spark.conf.unset("spark.torcharrow.arrowPairKernels")
-    assert kernel == legacy
-    keep = {i: k for i, _c, k in kernel}
-    assert keep[0] and not keep[1] and not keep[2]  # dup class collapses
-    assert keep[3] and keep[4] and keep[7]          # null cos never drops
-    assert keep[5] and not keep[11]                 # NaN cosine drops the
-    #                                                 higher id of the pair
+    df = spark.createDataFrame(rows, _GOLDEN_SCHEMA)
+    return sorted(
+        (r["vec_id"], r["cluster"], r["keep"])
+        for r in semantic_dedup(df, **kw).collect()
+    )
 
 
-def test_cosine_pairs_kernel_matches_jvm_path(spark, monkeypatch):
-    """r13 optimization pin: the Arrow pair-cosine kernel
-    (similarity._bucket_pair_cosines) emits the EXACT rows of the
-    legacy JVM pair plan — same pair set (including the election's
-    thinned C(reps,2)+stars list when a duplicated class crosses the
-    onset), bit-identical cosine doubles, and the same hostile-input
-    semantics (null/ragged vectors never pass the threshold filter,
-    NaN cosines always do)."""
-    import math
+def _golden_pairs(spark, rows, **kw):
+    import struct
 
-    import torcharrow_spark.operators.dedup as dd
     from torcharrow_spark.operators.similarity import cosine_pairs
 
-    nan = float("nan")
-    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(30)]  # dup class
-    rows += [
-        (100, [0.0, 1.0, 0.0, 0.0]),
-        (101, [0.0, 0.999, 0.01, 0.0]),
-        (102, None),
-        (103, [1.0, None, 0.0, 0.0]),
-        (104, [nan, 0.0, 0.0, 0.0]),
-        (105, [0.0, 0.0, 0.0, 0.0]),
-        (106, [1.0, 0.0]),
-        (107, [0.6, 0.8, 0.0, 0.0]),
+    df = spark.createDataFrame(rows, _GOLDEN_SCHEMA)
+    return sorted(
+        (r["id_a"], r["id_b"], struct.pack(">d", r["cosine"]).hex())
+        for r in cosine_pairs(df, **kw).collect()
+    )
+
+
+def test_semantic_dedup_golden(spark):
+    """semantic_dedup's pair kernel reproduces the JVM pair plan's
+    output: Spark's NaN-compares-greatest semantics, zip_with null
+    padding on ragged/null vectors, and the when() 0.0 fallback for
+    non-positive norms."""
+    got = _golden_dedup(
+        spark, _GOLDEN_SD_ROWS, threshold=0.5,
+        centroids=[[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]],
+    )
+    assert got == [
+        (0, 0, True), (1, 0, False), (2, 0, False), (3, 1, True),
+        (4, 1, True), (5, 1, True), (6, 1, True), (7, 1, True),
+        (8, 1, False), (9, 1, False), (10, 1, False), (11, 1, False),
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    def run():
-        out = cosine_pairs(df, threshold=0.5, n_planes=2)
-        return sorted(
-            (r["id_a"], r["id_b"], r["cosine"]) for r in out.collect()
-        )
 
-    def check_equal():
-        kern = run()
-        spark.conf.set("spark.torcharrow.arrowPairKernels", "false")
-        try:
-            legacy = run()
-        finally:
-            spark.conf.unset("spark.torcharrow.arrowPairKernels")
-        assert len(kern) == len(legacy)
-        for (a, b, c), (la, lb, lc) in zip(kern, legacy):
-            assert (a, b) == (la, lb)
-            assert c == lc or (math.isnan(c) and math.isnan(lc))
-        return kern
+def test_cosine_pairs_golden(spark, monkeypatch):
+    """cosine_pairs' kernel emits the JVM pair plan's exact rows: the
+    same pair set (including the election's C(reps,2)+stars list when
+    a duplicated class crosses the onset) and bit-identical cosines;
+    null/ragged vectors never pass the threshold, NaN cosines always
+    do."""
+    import torcharrow_spark.operators.dedup as dd
 
-    full = check_equal()
-    # force election: the 30-member duplicate class must THIN to
-    # C(reps,2) + stars on both paths — fewer rows than full emission
+    dup = [(a, b, _ONE) for a in range(30) for b in range(a + 1, 30)]
+    tail = [
+        (100, 101, "3fefff96f0b5b14a"),
+        (100, 107, "3fe9999995c28f5d"),
+        (101, 107, "3fe99945898729cd"),
+    ]
+    nan_rows = [(a, 104, "7ff8000000000000") for a in range(30)]
+    got = _golden_pairs(spark, _GOLDEN_CP_ROWS, threshold=0.5, n_planes=2)
+    assert got == sorted(dup + nan_rows + tail)
+    # forced election: the 30-member class thins to its rep's 29 stars
     monkeypatch.setattr(dd, "DEFAULT_ELECT_THRESHOLD", 8)
-    elected = check_equal()
-    assert len(elected) < len(full)
-    # the dup class stays fully covered through its rep's stars
-    star_targets = {b for a, b, _ in elected if a == 0}
-    assert star_targets >= set(range(1, 30))
+    got = _golden_pairs(spark, _GOLDEN_CP_ROWS, threshold=0.5, n_planes=2)
+    stars = [(0, b, _ONE) for b in range(1, 30)]
+    assert got == sorted(stars + nan_rows[:1] + tail)
+
+
+def test_pair_kernel_golden_hostile_member_in_elected_bucket(
+    spark, monkeypatch
+):
+    """A null vector inside an elected bucket: the election still runs
+    (reps + stars), and pairs with the hostile member take the exact
+    JVM semantics (null norm -> cosine 0.0, which passes a 0.0 bar)."""
+    import torcharrow_spark.operators.dedup as dd
+
+    monkeypatch.setattr(dd, "DEFAULT_ELECT_THRESHOLD", 4)
+    cent = [[1.0, 0.0, 0.0, 0.0]]
+    keep = [
+        (i, 0, k) for i, k in enumerate(
+            [True] + [False] * 6 + [True, False, False, True, True]
+            + [False] * 3
+        )
+    ]
+    assert _golden_dedup(
+        spark, _GOLDEN_EL_ROWS, threshold=0.5, centroids=cent
+    ) == keep
+    assert _golden_dedup(
+        spark, _GOLDEN_EL_ROWS, threshold=0.0, centroids=cent
+    ) == [(0, 0, True)] + [(i, 0, False) for i in range(1, 15)]
+
+    zero = "0000000000000000"
+    stars = [(0, b, _ONE) for b in range(1, 6)]
+    # one plane: the null vector shares a 2-member bucket with 14
+    pairs = [
+        (0, 6, "3fefff96f0b5b14a"), (0, 8, "7ff8000000000000"),
+        (0, 12, "3fe333333851eb82"), (6, 8, "7ff8000000000000"),
+        (6, 12, "3fe3748d5a23f8df"), (8, 9, "7ff8000000000000"),
+        (8, 12, "7ff8000000000000"), (12, 13, "3feffffffffffffe"),
+    ]
+    zeros = [(0, 10, zero), (6, 10, zero), (7, 14, zero), (8, 10, zero),
+             (10, 11, zero), (10, 12, zero)]
+    assert _golden_pairs(
+        spark, _GOLDEN_EL_ROWS, threshold=0.5, n_planes=1
+    ) == sorted(stars + pairs)
+    assert _golden_pairs(
+        spark, _GOLDEN_EL_ROWS, threshold=0.0, n_planes=1
+    ) == sorted(stars + pairs + zeros)
+    # negated rows (same cosines): the null vector now lands in the
+    # 10-member bucket, where it is a representative of its own class
+    neg = [(i, v and [-x for x in v]) for i, v in _GOLDEN_EL_ROWS]
+    pairs = [
+        (0, 6, "3fefff96f0b5b14a"), (0, 12, "3fe333333851eb82"),
+        (6, 12, "3fe3748d5a23f8df"), (8, 9, "fff8000000000000"),
+        (8, 14, "fff8000000000000"), (12, 13, "3feffffffffffffe"),
+    ]
+    zeros = [(0, 7, zero), (6, 7, zero), (7, 12, zero), (8, 10, zero),
+             (10, 11, zero), (10, 14, zero)]
+    assert _golden_pairs(
+        spark, neg, threshold=0.5, n_planes=1
+    ) == sorted(stars + pairs)
+    assert _golden_pairs(
+        spark, neg, threshold=0.0, n_planes=1
+    ) == sorted(stars + pairs + zeros)
+
+
+def _member_bucket(ids, vecs, norms):
+    import pyarrow as pa
+
+    typ = pa.struct([("i", pa.int64()), ("v", pa.list_(pa.float32())),
+                     ("n", pa.float64())])
+    return pa.array(
+        [{"i": a, "v": b, "n": c} for a, b, c in zip(ids, vecs, norms)], typ
+    )
+
+
+def test_pair_kernel_hostile_member_is_linear():
+    """One null-vector member in a bucket of m clean ones costs at most
+    m exact per-pair calls; the clean pairs keep the vectorized sweep
+    and its survivors are exactly those of the clean bucket alone."""
+    import numpy as np
+
+    from torcharrow_spark.operators.similarity import _bucket_survivors_fn
+
+    m = 2000
+    rng = np.random.default_rng(7)
+    V = rng.standard_normal((m, 8)).astype(np.float32)
+    V[:200, 1:] *= 0.05              # a dense corner: survivors exist
+    ids = list(range(m))
+    vecs = [v.tolist() for v in V]
+    norms = [float(np.sqrt(np.sum(v.astype(np.float64) ** 2))) for v in V]
+    survivors = _bucket_survivors_fn(0.9, 1 << 18)
+
+    def run(ms):
+        a, b, cos, n_exact = survivors(ms)
+        i = ms.field("i").to_numpy()
+        return sorted(zip(i[a], i[b], cos.tolist())), n_exact
+
+    want, n_exact = run(_member_bucket(ids, vecs, norms))
+    assert want and n_exact == 0
+    k = m // 3
+    got, n_exact = run(_member_bucket(
+        ids[:k] + [-1] + ids[k:], vecs[:k] + [None] + vecs[k:],
+        norms[:k] + [None] + norms[k:],
+    ))
+    assert 0 < n_exact <= m
+    assert got == want
+
+
+def test_pair_kernel_ships_without_the_package(tmp_path):
+    """The mapInArrow function is pickled by value: a fresh interpreter
+    unpickles and runs it with numpy and pyarrow alone, never importing
+    torcharrow_spark (a module-level core costs a cold Python worker
+    that import on the kernel stage)."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from torcharrow_spark.operators.similarity import (
+        _bucket_survivors_fn,
+        _pair_kernel_fn,
+    )
+
+    path = tmp_path / "kern.pkl"
+    path.write_bytes(cloudpickle.dumps(
+        _pair_kernel_fn(_bucket_survivors_fn(0.5, 8), None)
+    ))
+    script = f"""
+import pickle, sys
+import pyarrow as pa
+kern = pickle.loads(open({str(path)!r}, "rb").read())
+assert not [m for m in sys.modules if m.startswith("torcharrow_spark")]
+typ = pa.struct([("i", pa.int64()), ("v", pa.list_(pa.float32())),
+                 ("n", pa.float64())])
+ms = pa.array([[{{"i": 1, "v": [1.0, 0.0], "n": 1.0}},
+                {{"i": 2, "v": [1.0, 0.0], "n": 1.0}}]], pa.list_(typ))
+(out,) = kern(iter([pa.RecordBatch.from_arrays([ms], ["ms"])]))
+assert out.to_pydict() == {{"id_a": [1], "id_b": [2], "cosine": [1.0]}}
+assert not [m for m in sys.modules if m.startswith("torcharrow_spark")]
+"""
+    # run from the repo root, where the package IS importable
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=root,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
 
 
 def test_bucket_audit_operators(spark):
@@ -4256,6 +4402,23 @@ def test_unigram_canonical_tie_break():
     # proof the canonical flag changes behavior only where ties exist
     assert UnigramTokenizer(v).encode_word("ab") == ["ab"]
     assert tok.encode_word("ab") == ["a", "b"]
+
+
+def test_unigram_vocab_and_tie_rule_are_read_only():
+    """The word memo, max_len and ids derive from vocab and
+    canonical_ties at construction, so neither may change afterwards:
+    rebinding raises instead of serving stale segmentations."""
+    from torcharrow_spark.functions.unigram import UnigramTokenizer
+
+    tok = UnigramTokenizer.toy()
+    before = tok.encode_word("then")
+    with pytest.raises(AttributeError):
+        tok.vocab = {"t": 1, "h": 1, "e": 1, "n": 1, "then": 1}
+    with pytest.raises(AttributeError):
+        tok.canonical_ties = True
+    with pytest.raises(TypeError):
+        tok.vocab["then"] = 1
+    assert tok.encode_word("then") == before
 
 
 def test_unigram_train_fit_properties(spark):

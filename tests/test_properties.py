@@ -347,6 +347,94 @@ def test_emit_pairs_property_vs_model(spark, sizes, chunk, elect_threshold):
         assert elected == want
 
 
+_NAN = float("nan")
+# a small pool so buckets hold duplicate classes; None = null element
+_POOL = [
+    [1.0, 0.0, 0.0], [0.999, 0.01, 0.0], [0.6, 0.8, 0.0], [-1.0, 0.0, 0.0],
+    [0.0, 0.0, 0.0], [-0.0, 0.0, 0.0], [_NAN, 0.0, 0.0],
+    [float("inf"), 0.0, 0.0], [0.25, -0.5, 0.75],
+    None, [1.0, None, 0.0], [1.0, 0.0],
+]
+
+
+@given(
+    picks=st.lists(
+        st.tuples(st.integers(0, len(_POOL) - 1), st.booleans(),
+                  st.booleans()),
+        min_size=2, max_size=30,
+    ),
+    threshold=st.sampled_from([-1.0, 0.0, 0.5, 0.95, 1.0]),
+    onset=st.sampled_from([2, 5, 1000]),
+    tile=st.sampled_from([1, 3, 512]),
+)
+@settings(max_examples=150, deadline=None)
+def test_pair_kernel_core_matches_pair_loop(picks, threshold, onset, tile):
+    """The pair kernel's per-bucket core (similarity._bucket_survivors_fn)
+    vs a pure-Python pair loop over the JVM semantics: per-pair
+    left-fold dot, when(n > 0) 0.0 fallback with NaN passing,
+    null-padded zip_with, survivors at cos >= t or NaN; above the onset
+    C(reps, 2) + (rep, member) stars over exact-byte vector classes.
+    Cosines must match bit for bit, at every tile edge."""
+    import struct
+
+    import numpy as np
+    import pyarrow as pa
+
+    from torcharrow_spark.operators.similarity import _bucket_survivors_fn
+
+    def f32(x):
+        return None if x is None else float(np.float32(x))
+
+    members = []
+    for k, (ix, null_id, null_norm) in enumerate(picks):
+        v = None if _POOL[ix] is None else [f32(x) for x in _POOL[ix]]
+        n = None
+        if v is not None and None not in v and not null_norm:
+            n = math.sqrt(sum((x * x for x in v), 0.0))
+        members.append((None if null_id else k, v, n))
+
+    def cos(a, b):
+        (_, va, na), (_, vb, nb) = members[a], members[b]
+        if not all(n is not None and (n > 0 or n != n) for n in (na, nb)):
+            return 0.0
+        if va is None or vb is None or len(va) != len(vb):
+            return None
+        if None in va or None in vb:
+            return None
+        dot = 0.0
+        for x, y in zip(va, vb):
+            dot = dot + x * y
+        return dot / (na * nb)
+
+    m = len(members)
+    if m > onset:
+        first, rep = {}, []
+        for k, (_, v, _) in enumerate(members):
+            key = None if v is None else tuple(
+                None if x is None else struct.pack("<d", x) for x in v
+            )
+            rep.append(first.setdefault(key, k))
+        reps = [k for k in range(m) if rep[k] == k]
+        pairs = [(a, b) for a in reps for b in reps if a < b]
+        pairs += [(rep[k], k) for k in range(m) if rep[k] != k]
+    else:
+        pairs = [(a, b) for a in range(m) for b in range(a + 1, m)]
+    want = {}
+    for a, b in pairs:
+        c = cos(a, b)
+        if c is not None and (c >= threshold or c != c):
+            want[(a, b)] = struct.pack("<d", c)
+
+    typ = pa.struct([("i", pa.int64()), ("v", pa.list_(pa.float32())),
+                     ("n", pa.float64())])
+    ms = pa.array([{"i": i, "v": v, "n": n} for i, v, n in members], typ)
+    a, b, c, _ = _bucket_survivors_fn(threshold, onset, tile)(ms)
+    got = {(int(x), int(y)): struct.pack("<d", z)
+           for x, y, z in zip(a, b, c)}
+    assert len(got) == len(a)
+    assert got == want
+
+
 @settings(max_examples=60, deadline=None)
 @given(
     seed=st.integers(0, 10_000),

@@ -282,34 +282,43 @@ def test_gopher_filter_keep_columns_shape(spark):
     assert row["keep"] is True and row["reason"] is None
 
 
-def test_scan_handle_cache_is_metadata_only(spark):
+def test_scan_handle_cache_is_metadata_only(spark, tmp_path):
     """r13 (guide §5.4): _load registers each bench table once per
     session — a lazy scan handle (plan + schema), never rows. Pins:
-    (a) repeat loads reuse the handle, (b) the kill switch bypasses it,
-    (c) the handle is keyed by applicationId so a different session id
-    never sees it."""
+    (a) repeat loads reuse the handle, (b) the handle is keyed by
+    applicationId so a different session id never sees it, (c) an
+    overwritten table is resolved anew, so the next load sees its new
+    rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from torcharrow_spark import queries as Q
 
     sf_dir = "/root/testdata/sf0.001"
     Q._SCAN_HANDLES.clear()
     a = Q._load(spark, sf_dir, "documents").to_spark()
-    key = (spark.sparkContext.applicationId, sf_dir, "documents")
-    assert key in Q._SCAN_HANDLES
+    key = (spark.sparkContext.applicationId, f"{sf_dir}/documents.parquet")
+    assert list(Q._SCAN_HANDLES) == [key]
     b = Q._load(spark, sf_dir, "documents").to_spark()
     # same underlying handle object — no second listing/footer pass
     assert a is b
     # still a LAZY plan: no rows held anywhere in the cache
     assert all(
-        hasattr(v, "queryExecution") or hasattr(v, "_jdf")
-        for v in Q._SCAN_HANDLES.values()
+        hasattr(sdf, "queryExecution") or hasattr(sdf, "_jdf")
+        for _ident, sdf in Q._SCAN_HANDLES.values()
     )
-    spark.conf.set("spark.torcharrow.scanRelationCache", "false")
-    try:
-        Q._SCAN_HANDLES.clear()
-        Q._load(spark, sf_dir, "documents")
-        assert Q._SCAN_HANDLES == {}
-    finally:
-        spark.conf.set("spark.torcharrow.scanRelationCache", "true")
+
+    def write(n):
+        pq.write_table(
+            pa.table({"doc_id": list(range(n)), "text": ["x"] * n}),
+            tmp_path / "documents.parquet",
+        )
+
+    write(2)
+    assert Q._load(spark, str(tmp_path), "documents").to_spark().count() == 2
+    write(3)
+    assert Q._load(spark, str(tmp_path), "documents").to_spark().count() == 3
+    assert len(Q._SCAN_HANDLES) == 2
 
 
 def test_spread_decision_cache_skips_repeat_probe(spark, monkeypatch):

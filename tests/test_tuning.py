@@ -239,12 +239,31 @@ def test_auto_sizing_targets():
 
 def test_session_confs_applied(spark):
     """session.tune() must actually land the documented conf values."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from torcharrow_spark.session import host_defaults
+
+    cpus = host_defaults()[0]
     assert spark.conf.get("spark.sql.ansi.enabled") == "false"
     assert spark.conf.get(
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     ) == str(cpus * 8)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_host_defaults_fit_the_host(monkeypatch):
+    """Unset, the local session sizes itself to the host: every usable
+    core, and the smaller of 16g and half of physical RAM. Explicit
+    values still win."""
+    from torcharrow_spark.session import host_defaults
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    cpus, memory = host_defaults()
+    assert cpus == len(os.sched_getaffinity(0))
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    assert memory == f"{min(16 << 10, ram_mb // 2)}m"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "5g")
+    assert host_defaults() == (3, "5g")
 
 
 def test_quantized_scan_ceiling_row():

@@ -134,222 +134,275 @@ def _cosine_from(dot, na, nb):
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
-def _pair_kernel_enabled(spark) -> bool:
-    """Arrow pair kernel opt-out: `spark.torcharrow.arrowPairKernels`
-    (default true) + numpy/pyarrow importable. The kill switch exists so
-    the legacy all-JVM pair plan stays one conf away (plan-pin tests and
-    the bit-identity pin flip it)."""
-    try:
-        if spark.conf.get(
-            "spark.torcharrow.arrowPairKernels", "true"
-        ).lower() == "false":
-            return False
-    except Exception:
-        pass
-    try:
-        import numpy  # noqa: F401
-        import pyarrow  # noqa: F401
-    except ImportError:
-        return False
-    return True
+#: edge of one pair-sweep tile: the sweep's working set beyond the
+#: bucket itself is a few (TILE x TILE) float64 blocks of 2 MiB each
+_PAIR_TILE = 512
 
 
-def _bucket_drop_ids(
-    buckets: SDF,
-    threshold: float,
-    id_col: str,
-    elect_threshold: int,
-    member_bytes: int,
-) -> SDF:
-    """semantic_dedup's within-bucket drop set — (id,) of every member
-    with an earlier (lower-sort-order) member at cosine >= threshold —
-    computed by ONE vectorized Arrow kernel over the bucket arrays
-    instead of the JVM pair explosion (r13, guide §4.2/§8: the buckets
-    frame is ~300 B/vector; the exploded pair frame the legacy plan
-    materializes carries TWO dim-float arrays per pair, ~250k pairs per
-    250-member bucket, each folded by an interpreted `aggregate`
-    lambda. Moving the decision into one numpy kernel crosses the
-    Python boundary with the SMALL side — measured 3.1 -> 0.8 s on
-    q138's dedup stage at sf0.1, output identical).
+def _bucket_survivors_fn(
+    threshold: float, onset: int, tile: int = _PAIR_TILE
+):
+    """Build the pair kernel's per-bucket core, ``survivors(ms) -> (a,
+    b, cos, n_exact)``: member positions a < b and the cosine of every
+    emitted pair that survives, i.e. whose cosine is >= threshold or NaN
+    (NaN compares greatest in Spark; a null cosine never survives), plus
+    the number of pairs the exact per-pair routine computed. ``ms`` is
+    one bucket's pyarrow StructArray of members ``(i, v, n)`` — id,
+    vector, norm — in sort_array order, so position order is member
+    order.
 
-    Bit-identity argument (pinned by
-    test_semantic_dedup_kernel_matches_jvm_path):
+    Pair set: every a < b pair. Above the election ``onset``, one
+    representative per class — the class's first member — and C(reps,
+    2) plus one (rep, member) star per other member, each with its real
+    cosine (`dedup._emit_pairs`' election; classes here are exact-byte
+    vector values, a refinement of its xxhash64 classes).
 
-    * dot: the JVM form is a strict left fold acc + x_i*y_i (doubles,
-      0.0 seed). The kernel accumulates `acc += A[:,d] * B[:,d]` per
-      dimension d ascending — each product and each add is the same
-      correctly-rounded float64 op on the same values (f32 -> f64
-      widening is exact), so every partial sum is bit-identical.
-    * cosine: dot/(na*nb) when na>0 AND nb>0 (Spark semantics: NaN > 0
-      is TRUE — NaN orders greatest), else exactly 0.0; the `>=
-      threshold` comparison likewise treats NaN as greatest, so the
-      kernel drops on `(cos >= t) | isnan(cos)` and accepts norms on
-      `(n > 0) | isnan(n)`.
-    * drop set: the kernel enumerates the FULL a<b pair set per bucket
-      (tiled, never materialized) — the reference semantics the SQL
-      oracles replay; the legacy plan's election collapse is drop-set
-      preserving (the `_emit_pairs` proof), so both paths agree.
-    * hostile rows (null/ragged vectors, null norms, null ids) route
-      the whole bucket through an exact per-pair Python loop that
-      mirrors zip_with null-padding (any null product -> dot null ->
-      pair never drops) and the when() 0.0 fallback.
+    Cosines are bit-identical to the JVM expression
+    ``_cosine_from(_dot(va, vb), na, nb)``: the dot is `_dot`'s strict
+    left fold (0.0 seed, one correctly rounded multiply and add per
+    dimension, ascending; f32 -> f64 widening is exact), then
+    when(na > 0 & nb > 0) with the 0.0 fallback, where a NaN norm passes
+    (NaN orders greatest) and a null one fails.
 
-    Memory/cost bound: buckets above the legacy election onset
-    (min(elect_threshold, ELECT_BYTES_BOUND/member_bytes)) collapse to
-    one representative per EXACT-BYTE vector class + (rep, member)
-    stars before the tile sweep — the same linear-in-duplication
-    escape hatch `_emit_pairs` applies, with byte equality instead of
-    xxhash64 classes (a strict refinement: no collision risk, same
-    drop set by the same proof)."""
-    import pyspark.sql.types as T
+    Hostile members — a null or ragged vector, a null element, a null
+    norm, all read off Arrow validity and offsets before any conversion
+    — never enter the tiled sweep. Only pairs that touch one go through
+    the exact routine, at most m calls per hostile member, so a bad row
+    costs linear time rather than the bucket's quadratic one. Ids never
+    enter the arithmetic, so a null id is not hostile.
 
-    from .dedup import ELECT_BYTES_BOUND
-
-    onset = min(
-        int(elect_threshold),
-        max(2, ELECT_BYTES_BOUND // max(int(member_bytes), 1)),
-    )
+    The closure refers to no module global and imports only numpy and
+    pyarrow: cloudpickle ships it by value, and a fresh Python worker
+    runs it without importing this package."""
     thr = float(threshold)
-    id_t = buckets.schema["ms"].dataType.elementType["i"].dataType
-    out_schema = T.StructType([T.StructField(id_col, id_t, True)])
+
+    def exact_cos(va, na, vb, nb):
+        # when(n > 0) fails on a null norm (0.0) before the dot is read;
+        # zip_with null-pads a null vector, a ragged pair or a null
+        # element, which nulls the dot and the cosine
+        if not all(n is not None and (n > 0 or n != n) for n in (na, nb)):
+            return 0.0
+        if va is None or vb is None or len(va) != len(vb):
+            return None
+        dot = 0.0
+        for x, y in zip(va, vb):
+            if x is None or y is None:
+                return None
+            dot = dot + x * y
+        den = na * nb
+        # IEEE x/0 (underflowed norms) where Python would raise
+        if den:
+            return dot / den
+        return dot * float("inf") if dot else float("nan")
+
+    def pair_cosines(A, B, na, nb):
+        import numpy as np
+
+        acc = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+        with np.errstate(all="ignore"):
+            for d in range(A.shape[-1]):
+                acc += A[..., d] * B[..., d]
+            cos = acc / (na * nb)
+        ok = ((na > 0) | np.isnan(na)) & ((nb > 0) | np.isnan(nb))
+        return np.where(ok, cos, 0.0)
+
+    def survives(cos):
+        import numpy as np
+
+        with np.errstate(invalid="ignore"):
+            return (cos >= thr) | np.isnan(cos)
+
+    def survivors(ms):
+        import numpy as np
+        import pyarrow.compute as pc
+
+        m = len(ms)
+        vv, nv = ms.field("v"), ms.field("n")
+        lens = pc.list_value_length(vv).fill_null(-1).to_numpy()
+        lens = lens.astype(np.int64)
+        ends = np.cumsum(np.maximum(lens, 0))
+        starts = ends - np.maximum(lens, 0)
+        flat = vv.flatten()
+        fnull = flat.is_null().to_numpy(zero_copy_only=False)
+        vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+        nulls_before = np.concatenate(([0], np.cumsum(fnull)))
+        sized = lens[lens >= 0]
+        dim = int(np.bincount(sized).argmax()) if len(sized) else 0
+        vec_ok = (lens == dim) & (nulls_before[ends] == nulls_before[starts])
+        clean = vec_ok & nv.is_valid().to_numpy(zero_copy_only=False)
+        ns = nv.to_numpy(zero_copy_only=False).astype(np.float64)
+        V = np.zeros((m, dim))
+        V[vec_ok] = vals[starts[vec_ok, None] + np.arange(dim)]
+
+        rep_of = np.arange(m)
+        if m > onset:
+            # class ids: one np.unique over the byte rows of well-formed
+            # vectors, a dict over (values, null mask) bytes for the rest
+            cls = np.zeros(m, dtype=np.int64)
+            okp = np.nonzero(vec_ok)[0]
+            if dim and len(okp):
+                rows = np.ascontiguousarray(V[okp]).view(
+                    np.dtype((np.void, 8 * dim))
+                )
+                cls[okp] = np.unique(rows.ravel(), return_inverse=True)[1]
+            other = {}
+            for k in np.nonzero(~vec_ok)[0]:
+                s, e = starts[k], ends[k]
+                key = None if lens[k] < 0 else (
+                    vals[s:e].tobytes() + fnull[s:e].tobytes()
+                )
+                cls[k] = other.setdefault(key, len(okp) + len(other))
+            first = np.full(int(cls.max()) + 1, m)
+            np.minimum.at(first, cls, np.arange(m))
+            rep_of = first[cls]
+
+        reps = np.nonzero(rep_of == np.arange(m))[0]
+        tails = np.nonzero(rep_of != np.arange(m))[0]
+        out = []
+        # clean x clean: C(clean reps, 2), tiled
+        sel = reps[clean[reps]]
+        for a0 in range(0, len(sel), tile):
+            asel = sel[a0:a0 + tile]
+            A, na = V[asel][:, None, :], ns[asel][:, None]
+            for b0 in range(a0, len(sel), tile):
+                bsel = sel[b0:b0 + tile]
+                cos = pair_cosines(A, V[bsel][None], na, ns[bsel][None])
+                ai, bi = np.nonzero(
+                    survives(cos) & (asel[:, None] < bsel[None, :])
+                )
+                out.append((asel[ai], bsel[bi], cos[ai, bi]))
+        # clean stars
+        st = tails[clean[tails] & clean[rep_of[tails]]]
+        cos = pair_cosines(V[rep_of[st]], V[st], ns[rep_of[st]], ns[st])
+        keep = survives(cos)
+        out.append((rep_of[st][keep], st[keep], cos[keep]))
+        # every emitted pair that touches a hostile member, one exact call each
+        hostile = [
+            (min(h, r), max(h, r))
+            for h in reps[~clean[reps]]
+            for r in reps
+            if r != h and (clean[r] or r > h)
+        ]
+        hostile += [
+            (rep_of[t], t) for t in tails
+            if not (clean[t] and clean[rep_of[t]])
+        ]
+        if hostile:
+            fl, nl, norms = vals.tolist(), fnull.tolist(), nv.to_pylist()
+
+            def py(k):
+                if lens[k] < 0:
+                    return None
+                return [
+                    None if nl[j] else fl[j]
+                    for j in range(starts[k], ends[k])
+                ]
+
+            vec = {k: py(k) for k in {k for pair in hostile for k in pair}}
+            hs = []
+            for a, b in hostile:
+                c = exact_cos(vec[a], norms[a], vec[b], norms[b])
+                if c is not None and (c >= thr or c != c):
+                    hs.append((a, b, c))
+            a, b, c = zip(*hs) if hs else ((), (), ())
+            out.append((np.asarray(a, np.int64), np.asarray(b, np.int64),
+                        np.asarray(c, np.float64)))
+        a, b, c = (np.concatenate(x) for x in zip(*out))
+        return a, b, c, len(hostile)
+
+    return survivors
+
+
+def _pair_kernel_fn(survivors, drop_col=None):
+    """The mapInArrow function over bucket rows ``ms``: ``(id_a, id_b,
+    cosine)`` per pair ``survivors`` emits, or, with ``drop_col``, only
+    each bucket's distinct surviving ``id_b`` — the keep-min-id drop
+    set — so no pair rows cross the boundary. Self-contained like
+    ``survivors``."""
+    names = ["id_a", "id_b", "cosine"] if drop_col is None else [drop_col]
 
     def kern(batches):
-        import math
-
         import numpy as np
         import pyarrow as pa
 
-        def tile_sweep(V, ns, drop, a_idx=None):
-            """Mark drop[k] for members with an earlier tile witness.
-            a_idx selects the candidate 'a' rows (reps only after a
-            collapse); pair order is position order = sorted-id order."""
-            m, dim = V.shape
-            arange = np.arange(m)
-            a_rows = arange if a_idx is None else a_idx
-            na_ok = (ns > 0) | np.isnan(ns)
-            TILE = 512
-            with np.errstate(all="ignore"):
-                for a0 in range(0, len(a_rows), TILE):
-                    asel = a_rows[a0:a0 + TILE]
-                    A, nsa = V[asel], ns[asel]
-                    for b0 in range(0, m, TILE):
-                        b1 = min(b0 + TILE, m)
-                        if b1 <= asel[0]:
-                            continue
-                        B = V[b0:b1]
-                        acc = np.zeros((len(asel), b1 - b0))
-                        for d in range(dim):
-                            acc += np.outer(A[:, d], B[:, d])
-                        nn = np.outer(nsa, ns[b0:b1])
-                        cos = acc / nn
-                        ok = na_ok[asel][:, None] & na_ok[None, b0:b1]
-                        cos = np.where(ok, cos, 0.0)
-                        dm = (cos >= thr) | np.isnan(cos)
-                        dm &= asel[:, None] < np.arange(b0, b1)[None, :]
-                        drop[b0:b1] |= dm.any(axis=0)
-
-        def exact_pair_cos(a, b):
-            """One pair through the exact JVM semantics (hostile path)."""
-            na, nb = a["n"], b["n"]
-            na_ok = na is not None and (na > 0 or math.isnan(na))
-            nb_ok = nb is not None and (nb > 0 or math.isnan(nb))
-            if not (na_ok and nb_ok):
-                return 0.0
-            va, vb = a["v"], b["v"]
-            if va is None or vb is None:
-                return None
-            dot = 0.0
-            for ix in range(max(len(va), len(vb))):
-                x = va[ix] if ix < len(va) else None
-                y = vb[ix] if ix < len(vb) else None
-                if x is None or y is None:
-                    return None
-                dot = dot + x * y
-            return dot / (na * nb)
-
-        out_type = None
         for batch in batches:
             col = batch.column(0)
-            if out_type is None:
-                out_type = (
-                    batch.schema.field(0).type.value_type.field("i").type
-                )
-            dropped = []
+            id_type = col.type.value_type.field("i").type
+            cols = [[] for _ in names]
             for r in range(batch.num_rows):
-                row = col[r]
-                if not row.is_valid:
-                    continue
-                sa = row.values
-                m = len(sa)
-                iv, vv, nv = sa.field("i"), sa.field("v"), sa.field("n")
-                hostile = (
-                    iv.null_count > 0
-                    or vv.null_count > 0
-                    or nv.null_count > 0
+                ms = col[r].values
+                a, b, cos, _ = survivors(ms)
+                ids = ms.field("i")
+                got = (
+                    (ids.take(a), ids.take(b), pa.array(cos, pa.float64()))
+                    if drop_col is None
+                    else (ids.take(np.unique(b)),)
                 )
-                if not hostile:
-                    flat = vv.flatten()
-                    lens = np.diff(np.asarray(vv.offsets))
-                    hostile = flat.null_count > 0 or (
-                        m > 0 and lens.min() != lens.max()
-                    )
-                if hostile:
-                    members = row.as_py()
-                    dropset = set()
-                    for k in range(1, m):
-                        b = members[k]
-                        if b["i"] in dropset:
-                            continue
-                        for j in range(k):
-                            cos = exact_pair_cos(members[j], b)
-                            if cos is not None and (
-                                cos >= thr or math.isnan(cos)
-                            ):
-                                dropset.add(b["i"])
-                                break
-                    dropped.extend(dropset)
-                    continue
-                dim = int(lens[0]) if m else 0
-                ids = iv.to_pylist()
-                ns = np.asarray(
-                    nv.to_numpy(zero_copy_only=False), dtype=np.float64
-                )
-                V = np.asarray(
-                    flat.to_numpy(zero_copy_only=False), dtype=np.float64
-                ).reshape(m, dim)
-                drop = np.zeros(m, dtype=bool)
-                if m > onset and dim > 0:
-                    # exact-byte election: rep = first (min-id) member
-                    # of each identical-vector class; stars drop the
-                    # rest of a class iff cos(v, v) clears the bar
-                    _, rep_idx, inv = np.unique(
-                        V.view([("", V.dtype)] * dim).ravel(),
-                        return_index=True,
-                        return_inverse=True,
-                    )
-                    with np.errstate(all="ignore"):
-                        self_dot = np.zeros(m)
-                        for d in range(dim):
-                            self_dot += V[:, d] * V[:, d]
-                        rep_of = rep_idx[inv]
-                        star_cos = np.where(
-                            ((ns > 0) | np.isnan(ns))
-                            & ((ns[rep_of] > 0) | np.isnan(ns[rep_of])),
-                            self_dot / (ns[rep_of] * ns),
-                            0.0,
-                        )
-                        star = (star_cos >= thr) | np.isnan(star_cos)
-                        star &= rep_of < np.arange(m)
-                        drop |= star
-                    tile_sweep(V, ns, drop, a_idx=np.sort(rep_idx))
-                else:
-                    tile_sweep(V, ns, drop)
-                for k in np.nonzero(drop)[0]:
-                    dropped.append(ids[int(k)])
+                for acc, arr in zip(cols, got):
+                    acc.append(arr)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(dropped, type=out_type)], [id_col]
+                [
+                    pa.chunked_array(c, type=t).combine_chunks()
+                    for c, t in zip(cols, [id_type, id_type, pa.float64()])
+                ],
+                names,
             )
 
+    return kern
+
+
+def _pair_kernel(
+    frame: SDF,
+    key: str,
+    id_col: str,
+    vec_col: str,
+    norm_col: str,
+    threshold: float,
+    dim: int,
+    drop_col=None,
+) -> SDF:
+    """The within-bucket pair stage of `cosine_pairs` and
+    `semantic_dedup`: group ``frame`` by ``key`` into sorted member
+    arrays, then verify every bucket's pairs in ONE mapInArrow kernel
+    (`_bucket_survivors_fn`, `_pair_kernel_fn`). LSH buckets and
+    clusters are few and fat, so the Arrow boundary ships each vector
+    once (~300 B at dim 64); a pair-row plan would explode C(m, 2) rows
+    carrying two vectors each and fold every dot through an interpreted
+    aggregate() lambda. Memory is bounded by the sweep's tiling
+    (`_PAIR_TILE`) and the bucket array itself, which the election onset
+    caps: min(DEFAULT_ELECT_THRESHOLD, ELECT_BYTES_BOUND / member
+    bytes), the `dedup._emit_pairs` rule."""
+    import pyspark.sql.types as T
+
+    from . import dedup
+
+    buckets = (
+        frame.groupBy(key)
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(
+                        F.col(id_col).alias("i"),
+                        F.col(vec_col).alias("v"),
+                        F.col(norm_col).alias("n"),
+                    )
+                )
+            ).alias("ms")
+        )
+        .where(F.size("ms") >= 2)
+    )
+    # member bytes: id(8) + norm(8) + dim floats(4d) + struct overhead
+    onset = min(
+        dedup.DEFAULT_ELECT_THRESHOLD,
+        max(2, dedup.ELECT_BYTES_BOUND // (32 + 4 * dim)),
+    )
+    id_t = buckets.schema["ms"].dataType.elementType["i"].dataType
+    names = ["id_a", "id_b", "cosine"] if drop_col is None else [drop_col]
+    types = [id_t, id_t, T.DoubleType()]
+    out_schema = T.StructType(
+        [T.StructField(n, t, True) for n, t in zip(names, types)]
+    )
+    kern = _pair_kernel_fn(_bucket_survivors_fn(threshold, onset), drop_col)
     return buckets.select("ms").mapInArrow(kern, out_schema)
 
 
@@ -708,259 +761,6 @@ def lsh_topk_multitable(
     )
 
 
-def _bucket_pair_cosines(
-    buckets: SDF, threshold: float, onset: int
-) -> SDF:
-    """cosine_pairs' pair stage — within-bucket pair emission, exact
-    cosine, threshold filter — as ONE vectorized Arrow kernel over the
-    bucket arrays (r13, guide §4.2: LSH buckets are FEW and FAT —
-    2^n_planes rows each carrying ~corpus/2^n_planes vectors — so the
-    boundary crossing ships ~300 B/vector once, where the legacy plan
-    exploded C(m,2) pair rows each carrying two dim-float arrays and
-    folded every dot through an interpreted aggregate() lambda).
-
-    Exactness (pinned by test_cosine_pairs_kernel_matches_jvm_path):
-
-    * arithmetic: the identical strict left-fold/når-ok/NaN rules as
-      `_bucket_drop_ids` (see its docstring) — the emitted `cosine`
-      doubles are bit-identical to the JVM expression's;
-    * pair set: members arrive pre-sorted (sort_array); under the
-      election onset all ordered pairs are swept. Above it, the legacy
-      election is replayed EXACTLY: the struct carries the same
-      ``xxhash64(v)`` class key (``ck``) the legacy elect_key computes,
-      a STABLE sort by ck reproduces the (key, member) sort (ck is a
-      function of v, so the received member order already tie-breaks
-      identically), reps are run heads (class min member), and the
-      emitted list is C(reps, 2) + (rep, member) stars with REAL
-      per-pair cosines (ck classes are hash classes, so star vectors
-      are only almost-surely identical — the kernel never assumes it);
-    * hostile rows (null/ragged vectors, null norms) take the exact
-      per-pair Python loop; null cosines are filtered exactly like the
-      JVM's null-compares-false `where`."""
-    import pyspark.sql.types as T
-
-    thr = float(threshold)
-    el = buckets.schema["ms"].dataType.elementType
-    id_t = el["i"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_t, True),
-            T.StructField("id_b", id_t, True),
-            T.StructField("cosine", T.DoubleType(), True),
-        ]
-    )
-
-    def kern(batches):
-        import math
-
-        import numpy as np
-        import pyarrow as pa
-
-        def pair_cos_exact(a, b):
-            na, nb = a["n"], b["n"]
-            na_ok = na is not None and (na > 0 or math.isnan(na))
-            nb_ok = nb is not None and (nb > 0 or math.isnan(nb))
-            if not (na_ok and nb_ok):
-                return 0.0
-            va, vb = a["v"], b["v"]
-            if va is None or vb is None:
-                return None
-            dot = 0.0
-            for ix in range(max(len(va), len(vb))):
-                x = va[ix] if ix < len(va) else None
-                y = vb[ix] if ix < len(vb) else None
-                if x is None or y is None:
-                    return None
-                dot = dot + x * y
-            return dot / (na * nb)
-
-        def slow_bucket(members, oa, ob, oc):
-            m = len(members)
-            if m > onset:
-                order = sorted(range(m), key=lambda ix: members[ix]["ck"])
-                runs, i = [], 0
-                while i < m:
-                    j = i
-                    while (
-                        j < m
-                        and members[order[j]]["ck"] == members[order[i]]["ck"]
-                    ):
-                        j += 1
-                    runs.append([order[k] for k in range(i, j)])
-                    i = j
-                reps = sorted(r[0] for r in runs)
-                pairs = [
-                    (reps[x], reps[y])
-                    for x in range(len(reps))
-                    for y in range(x + 1, len(reps))
-                ]
-                for r in runs:
-                    pairs.extend((r[0], mem) for mem in r[1:])
-            else:
-                pairs = [
-                    (j, k) for j in range(m) for k in range(j + 1, m)
-                ]
-            for j, k in pairs:
-                cos = pair_cos_exact(members[j], members[k])
-                if cos is not None and (cos >= thr or math.isnan(cos)):
-                    oa.append(members[j]["i"])
-                    ob.append(members[k]["i"])
-                    oc.append(cos)
-
-        def fold_cos(V, ns, na_ok, ai, bi):
-            """Exact cosines for index-pair vectors (1-D index arrays):
-            per-dimension fold, then the when() 0.0 fallback."""
-            acc = np.zeros(len(ai))
-            for d in range(V.shape[1]):
-                acc += V[ai, d] * V[bi, d]
-            with np.errstate(all="ignore"):
-                cos = acc / (ns[ai] * ns[bi])
-            return np.where(na_ok[ai] & na_ok[bi], cos, 0.0)
-
-        def tile_pairs(V, ns, na_ok, ids, sel, col_a, col_b, col_c):
-            """All ordered pairs within the `sel` subset (positions in
-            ascending member order), tiled; emit survivors."""
-            TILE = 512
-            n = len(sel)
-            for a0 in range(0, n, TILE):
-                asel = sel[a0:a0 + TILE]
-                for b0 in range(a0, n, TILE):
-                    bsel = sel[b0:min(b0 + TILE, n)]
-                    acc = np.zeros((len(asel), len(bsel)))
-                    for d in range(V.shape[1]):
-                        acc += np.outer(V[asel, d], V[bsel, d])
-                    with np.errstate(all="ignore"):
-                        cos = acc / np.outer(ns[asel], ns[bsel])
-                    cos = np.where(
-                        na_ok[asel][:, None] & na_ok[None, bsel], cos, 0.0
-                    )
-                    keep = (cos >= thr) | np.isnan(cos)
-                    keep &= asel[:, None] < bsel[None, :]
-                    ai, bi = np.nonzero(keep)
-                    if len(ai):
-                        col_a.append(
-                            np.asarray([ids[int(asel[x])] for x in ai])
-                        )
-                        col_b.append(
-                            np.asarray([ids[int(bsel[x])] for x in bi])
-                        )
-                        col_c.append(cos[ai, bi])
-
-        out_type = None
-        for batch in batches:
-            col = batch.column(0)
-            if out_type is None:
-                out_type = (
-                    batch.schema.field(0).type.value_type.field("i").type
-                )
-            oa, ob, oc = [], [], []
-            ka, kb, kc = [], [], []
-            for r in range(batch.num_rows):
-                row = col[r]
-                if not row.is_valid:
-                    continue
-                sa = row.values
-                m = len(sa)
-                iv, vv = sa.field("i"), sa.field("v")
-                nv, cv = sa.field("n"), sa.field("ck")
-                hostile = (
-                    iv.null_count > 0
-                    or vv.null_count > 0
-                    or nv.null_count > 0
-                    or cv.null_count > 0
-                )
-                if not hostile:
-                    flat = vv.flatten()
-                    lens = np.diff(np.asarray(vv.offsets))
-                    hostile = flat.null_count > 0 or (
-                        m > 0 and lens.min() != lens.max()
-                    )
-                if not hostile:
-                    try:
-                        ids = iv.to_pylist()
-                        ns = np.asarray(
-                            nv.to_numpy(zero_copy_only=False),
-                            dtype=np.float64,
-                        )
-                        V = np.asarray(
-                            flat.to_numpy(zero_copy_only=False),
-                            dtype=np.float64,
-                        ).reshape(m, int(lens[0]) if m else 0)
-                    except Exception:
-                        hostile = True
-                if hostile:
-                    slow_bucket(row.as_py(), oa, ob, oc)
-                    continue
-                na_ok = (ns > 0) | np.isnan(ns)
-                if m > onset:
-                    ck = np.asarray(
-                        cv.to_numpy(zero_copy_only=False), dtype=np.int64
-                    )
-                    order = np.argsort(ck, kind="stable")
-                    ck_s = ck[order]
-                    run_start = np.ones(m, dtype=bool)
-                    run_start[1:] = ck_s[1:] != ck_s[:-1]
-                    rep_idx = np.sort(order[run_start])
-                    tile_pairs(V, ns, na_ok, ids, rep_idx, ka, kb, kc)
-                    rep_of_sorted = order[run_start][
-                        np.cumsum(run_start) - 1
-                    ]
-                    tails = order[~run_start]
-                    reps_for_tails = rep_of_sorted[~run_start]
-                    if len(tails):
-                        cosv = fold_cos(
-                            V, ns, na_ok, reps_for_tails, tails
-                        )
-                        keep = (cosv >= thr) | np.isnan(cosv)
-                        sel = np.nonzero(keep)[0]
-                        if len(sel):
-                            ka.append(
-                                np.asarray(
-                                    [
-                                        ids[int(reps_for_tails[x])]
-                                        for x in sel
-                                    ]
-                                )
-                            )
-                            kb.append(
-                                np.asarray(
-                                    [ids[int(tails[x])] for x in sel]
-                                )
-                            )
-                            kc.append(cosv[sel])
-                else:
-                    tile_pairs(
-                        V, ns, na_ok, ids, np.arange(m), ka, kb, kc
-                    )
-            arrs_a = [pa.array(x, type=out_type) for x in ka]
-            arrs_b = [pa.array(x, type=out_type) for x in kb]
-            arrs_c = [pa.array(x, type=pa.float64()) for x in kc]
-            if oa:
-                arrs_a.append(pa.array(oa, type=out_type))
-                arrs_b.append(pa.array(ob, type=out_type))
-                arrs_c.append(pa.array(oc, type=pa.float64()))
-            if arrs_a:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.concat_arrays(arrs_a),
-                        pa.concat_arrays(arrs_b),
-                        pa.concat_arrays(arrs_c),
-                    ],
-                    ["id_a", "id_b", "cosine"],
-                )
-            else:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([], type=out_type),
-                        pa.array([], type=out_type),
-                        pa.array([], type=pa.float64()),
-                    ],
-                    ["id_a", "id_b", "cosine"],
-                )
-
-    return buckets.select("ms").mapInArrow(kern, out_schema)
-
-
 def cosine_pairs(
     corpus: SDF,
     threshold: float = 0.95,
@@ -988,7 +788,13 @@ def cosine_pairs(
     extra plane halves per-bucket work but splits some true near-dup
     pairs across buckets (recall/cost trade-off inherent to
     single-table hyperplane LSH); pin an explicit int for strict
-    run-to-run comparability."""
+    run-to-run comparability.
+
+    The within-bucket step is `_pair_kernel`: one Arrow kernel sweeps
+    each bucket's pairs in fixed-size tiles (the memory bound), with
+    cosines bit-identical to the `cosine` expression; a bucket past the
+    election onset collapses byte-identical vectors to representative
+    stars. Returns ``(id_a, id_b, cosine)`` with id_a before id_b."""
     n_planes = _resolve_n_planes(corpus, n_planes, "cosine_pairs")
     dim = _infer_dim(corpus, vec_col)
     c = corpus.select(
@@ -997,76 +803,8 @@ def cosine_pairs(
         _norm(F.col(vec_col)).alias("__norm__"),
         lsh_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
     )
-    from .dedup import DEFAULT_ELECT_THRESHOLD, ELECT_BYTES_BOUND, _emit_pairs
-
-    # election class key = xxhash64 of the raw vector (free: the vector
-    # already rides the bucket shuffle): byte-identical embeddings are
-    # cosine-1.0 duplicates, so a pathological bucket collapses to
-    # per-vector-class representatives + linear stars (cosine exactly
-    # 1.0 in the projection below, so stars survive any threshold <= 1).
-    # member_bytes: id(8) + norm(8) + dim floats(4d) + struct overhead —
-    # the bytes-based onset (dedup.ELECT_BYTES_BOUND) makes these
-    # wide-payload buckets elect early enough that the collect_list
-    # buffer stays bounded at any dim (r8, VERDICT r7 ask #5)
-    member_bytes = 32 + 4 * dim
-    if _pair_kernel_enabled(corpus.sparkSession):
-        # r13 (guide §4.2): pair emission + exact cosine + threshold in
-        # one Arrow kernel over the bucket arrays; the class key rides
-        # the struct so the kernel replays the election with the SAME
-        # ck values the legacy elect_key computes (exactness argument
-        # in _bucket_pair_cosines). Measured 1.27 -> 0.52 s on the q42
-        # pair stage at sf0.1, identical rows.
-        buckets = (
-            c.groupBy("bucket")
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col(id_col).alias("i"),
-                            F.col(vec_col).alias("v"),
-                            F.col("__norm__").alias("n"),
-                            F.xxhash64(F.col(vec_col)).alias("ck"),
-                        )
-                    )
-                ).alias("ms")
-            )
-            .where(F.size("ms") >= 2)
-        )
-        onset = min(
-            DEFAULT_ELECT_THRESHOLD,
-            max(2, ELECT_BYTES_BOUND // member_bytes),
-        )
-        return _bucket_pair_cosines(buckets, threshold, onset)
-    buckets = (
-        c.groupBy("bucket")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col(id_col).alias("i"), F.col(vec_col).alias("v"), F.col("__norm__").alias("n")))
-            ).alias("ms")
-        )
-        .where(F.size("ms") >= 2)
-    )
-    # memory-bounded pair emission (dedup._emit_pairs): a hot bucket of
-    # m vectors would otherwise materialize C(m, 2) struct pairs — each
-    # carrying TWO dim-float arrays — in a single flatten() value
-    exploded = _emit_pairs(
-        buckets, "ms", elect_key=lambda x: F.xxhash64(x["v"]),
-        elect_threshold=DEFAULT_ELECT_THRESHOLD,
-        member_bytes=member_bytes,
-    ).select(
-        F.col("__a__.i").alias("id_a"),
-        F.col("__b__.i").alias("id_b"),
-        F.col("__a__.v").alias("__va__"),
-        F.col("__b__.v").alias("__vb__"),
-        F.col("__a__.n").alias("__na__"),
-        F.col("__b__.n").alias("__nb__"),
-    )
-    cos = _cosine_from(
-        _dot(F.col("__va__"), F.col("__vb__")), F.col("__na__"), F.col("__nb__")
-    )
-    return (
-        exploded.select("id_a", "id_b", cos.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+    return _pair_kernel(
+        c, "bucket", id_col, vec_col, "__norm__", threshold, dim
     )
 
 
@@ -1098,8 +836,9 @@ def semantic_dedup(
 
     Scale design: the quadratic step is confined per cluster (size
     n_clusters ~ sqrt(corpus) like IVF so cluster populations stay a
-    few thousand); pair emission is memory-bounded (`_emit_pairs`);
-    cross-cluster near-dups are missed by design — SemDeDup's own
+    few thousand); the pair sweep (`_pair_kernel`) is memory-bounded
+    by its tiling and reduces each cluster to its drop set in the
+    worker; cross-cluster near-dups are missed by design — SemDeDup's own
     approximation, priced against never comparing across cells.
     Returns ``(id, cluster, keep)`` for every input vector.
 
@@ -1138,66 +877,14 @@ def semantic_dedup(
         _norm(F.col(vec_col)).alias("__n__"),
         F.array_max(sims)["c"].alias("cluster"),
     )
-    buckets = (
-        assigned.groupBy("cluster")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col(id_col).alias("i"),
-                        F.col(vec_col).alias("v"),
-                        F.col("__n__").alias("n"),
-                    )
-                )
-            ).alias("ms")
+    dropped = (
+        _pair_kernel(
+            assigned, "cluster", id_col, vec_col, "__n__", threshold,
+            _infer_dim(corpus, vec_col), drop_col=id_col,
         )
-        .where(F.size("ms") >= 2)
+        .distinct()
+        .withColumn("__dropped__", F.lit(True))
     )
-    from .dedup import DEFAULT_ELECT_THRESHOLD, _emit_pairs
-
-    member_bytes = 32 + 4 * _infer_dim(corpus, vec_col)
-    if _pair_kernel_enabled(corpus.sparkSession):
-        # r13 (guide §4.2/§8): the drop decision is the ONLY consumer
-        # of the pair cosines here, so compute it inside one Arrow
-        # kernel over the bucket arrays instead of exploding C(m,2)
-        # vector-pair rows through interpreted aggregate() folds —
-        # bit-identity argument and hostile-input handling in
-        # _bucket_drop_ids. Measured 3.1 -> 0.8 s on q138's dedup
-        # stage at sf0.1, output identical (pinned).
-        dropped = (
-            _bucket_drop_ids(
-                buckets, threshold, id_col,
-                DEFAULT_ELECT_THRESHOLD, member_bytes,
-            )
-            .distinct()
-            .withColumn("__dropped__", F.lit(True))
-        )
-    else:
-        # legacy all-JVM pair plan (kill switch / no numpy).
-        # election (see cosine_pairs): a member's rep is its class MIN
-        # id with an IDENTICAL vector, so every "earlier similar doc"
-        # witness full emission finds survives the collapse — the
-        # keep-first drop set below is exactly unchanged (proof in
-        # _emit_pairs docstring); member_bytes makes the onset
-        # bytes-aware for the wide vector payload (r8)
-        pairs = _emit_pairs(
-            buckets, "ms", elect_key=lambda x: F.xxhash64(x["v"]),
-            elect_threshold=DEFAULT_ELECT_THRESHOLD,
-            member_bytes=member_bytes,
-        ).select(
-            F.col("__b__.i").alias(id_col),
-            _cosine_from(
-                _dot(F.col("__a__.v"), F.col("__b__.v")),
-                F.col("__a__.n"),
-                F.col("__b__.n"),
-            ).alias("__cos__"),
-        )
-        dropped = (
-            pairs.where(F.col("__cos__") >= threshold)
-            .select(id_col)
-            .distinct()
-            .withColumn("__dropped__", F.lit(True))
-        )
     return (
         assigned.select(id_col, "cluster")
         .join(dropped, id_col, "left")

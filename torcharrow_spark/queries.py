@@ -13,6 +13,7 @@ sorted by name).
 
 from __future__ import annotations
 
+import os
 import typing as _ty
 
 from pyspark.sql import DataFrame as SDF
@@ -46,9 +47,26 @@ def query(name: str, oracle: str | None = None):
 #: plan + schema metadata, never rows; every action still scans the
 #: parquet files, so no result or intermediate is ever reused (the first
 #: build in a session — every cold number — pays the full resolution).
-#: Keyed by applicationId so a new session never sees stale handles.
-#: Kill switch: ``spark.torcharrow.scanRelationCache=false``.
+#: Keyed by applicationId and table path, so a new session never sees
+#: stale handles; each handle carries the file identity it was resolved
+#: against (`_file_identity`), and a rewritten table is resolved anew.
 _SCAN_HANDLES: dict = {}
+
+
+def _file_identity(path: str) -> tuple:
+    """``(file, size, mtime_ns)`` of every file under a local table path
+    (a file or a directory of part files), sorted: what a scan handle's
+    listing and footers were read from. Empty for a path that is not
+    local."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+    out = []
+    for f in sorted(files):
+        st = os.stat(f)
+        out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
 
 
 def _load(spark: SparkSession, sf_dir: str, table: str):
@@ -58,27 +76,19 @@ def _load(spark: SparkSession, sf_dir: str, table: str):
     from torcharrow_spark.sources import read_parquet_ns
 
     ts.tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    sdf = _SCAN_HANDLES.get(key)
-    if sdf is None:
+    path = f"{sf_dir}/{table}.parquet"
+    key = (spark.sparkContext.applicationId, path)
+    ident = _file_identity(path)
+    hit = _SCAN_HANDLES.get(key)
+    if hit is None or hit[0] != ident:
         if table == "events":
-            sdf = read_parquet_ns(f"{sf_dir}/events.parquet", spark).to_spark()
+            sdf = read_parquet_ns(path, spark).to_spark()
         else:
-            sdf = ts.read_parquet(f"{sf_dir}/{table}.parquet", spark).to_spark()
-        try:
-            cache_on = (
-                spark.conf.get(
-                    "spark.torcharrow.scanRelationCache", "true"
-                ).lower()
-                == "true"
-            )
-        except Exception:
-            cache_on = True
-        if cache_on:
-            if len(_SCAN_HANDLES) > 256:
-                _SCAN_HANDLES.clear()
-            _SCAN_HANDLES[key] = sdf
-    return TAFrame(sdf)
+            sdf = ts.read_parquet(path, spark).to_spark()
+        if len(_SCAN_HANDLES) > 256:
+            _SCAN_HANDLES.clear()
+        hit = _SCAN_HANDLES[key] = (ident, sdf)
+    return TAFrame(hit[1])
 
 
 # exact decimal sum of a 2-decimal double column, returned as double

@@ -11,6 +11,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def host_defaults() -> tuple[int, str]:
+    """``(cpus, driver_memory)`` for the local session. An explicit
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY`` wins; unset, cpus is
+    the usable core count (the affinity mask, which a container's cpuset
+    narrows) and driver memory is the smaller of 16g and half of
+    physical RAM."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    mem = os.environ.get("SPARK_DRIVER_MEMORY")
+    if not mem:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        mem = f"{min(16 << 10, ram_mb // 2)}m"
+    return int(cpus), mem
+
+
 _RUNTIME_CONFS = {
     # Reference semantics are IEEE/C++-style (x/0.0 -> ±inf, truncating
     # casts, null on invalid array index: SURVEY §2.7), which is Spark's
@@ -35,7 +50,7 @@ _RUNTIME_CONFS = {
     # memory. On a 1000-executor cluster the same principle holds:
     # initial width scales with the cluster, AQE right-sizes per stage.
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(
-        int(os.environ.get("SPARK_GRAFT_CPUS", "32")) * 8
+        host_defaults()[0] * 8
     ),
     # Arrow batch exchange for every pandas_udf / toPandas path.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -56,7 +71,7 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
         except Exception:
             pass
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = host_defaults()[0]
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     except Exception:
@@ -65,14 +80,14 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
 
 
 def get_session(app: str = "torcharrow-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, memory = host_defaults()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.shuffle.partitions", str(cpus))
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)
