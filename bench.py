@@ -613,7 +613,8 @@ HEADLINE_SHUFFLE_ANCHOR: dict[str, int] = {
     # (doc_id, text) rows — measured 851481 B, byte-identical to
     # q128_gopher_filter's pin (the same ungated spread) — plus the
     # unchanged conf-isolated no-spread components 136743 B
-    # (spreadNarrowSource=false reproduces it) = 988224. The win this
+    # (measured with the since-removed spreadNarrowSource=false conf)
+    # = 988224. The win this
     # buys: the gate's signal battery runs in 32 tasks instead of the
     # scan's one (2.03 -> 0.87 s steady at sf0.1).
     "q129_curation_pipeline": 988224,

@@ -4154,8 +4154,7 @@ def test_cap_amplified_scan(spark, tmp_path):
     assert cp is not proj and cp.columns == proj.columns
 
     # deliberate no-ops: a Filter cannot be reproduced by a re-read;
-    # in-memory plans have no file splits; a STRICTER manual conf wins;
-    # and the kill switch disables everything
+    # in-memory plans have no file splits; a STRICTER manual conf wins
     filt = scan.where("doc_id > 5")
     assert cap_amplified_scan(filt, rows_budget=1 << 17) is filt
     mem = spark.range(10)
@@ -4165,11 +4164,6 @@ def test_cap_amplified_scan(spark, tmp_path):
         assert cap_amplified_scan(scan, rows_budget=1 << 21) is scan
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", before)
-    spark.conf.set("spark.torcharrow.amplifiedScanCap", "false")
-    try:
-        assert cap_amplified_scan(scan, rows_budget=1 << 17) is scan
-    finally:
-        spark.conf.unset("spark.torcharrow.amplifiedScanCap")
 
 
 def test_spread_narrow_source_adaptive(spark, sf_dir):
@@ -4209,6 +4203,77 @@ def test_spread_narrow_source_adaptive(spark, sf_dir):
     wide_src = spark.read.parquet(f"{d}/wide")
     assert wide_src.rdd.getNumPartitions() * 2 > par
     assert spread_narrow_source(wide_src) is wide_src
+
+
+def test_spread_decision_starts_no_job(spark, sf_dir, monkeypatch):
+    """The spread decision is planning only: across scans, filters,
+    aggregates, both join families, unions and in-memory sources it
+    starts no Spark job and never converts a frame to an RDD. A
+    broadcast join follows its streamed side: a narrow probe scan is
+    spread, a checkpointed probe side is not."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.classic import dataframe as _cdf
+
+    from torcharrow_spark.operators import spread_narrow_source
+
+    par = spark.sparkContext.defaultParallelism
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    ckpt = orders.localCheckpoint(eager=True)
+    dim = F.broadcast(nation)
+    # input -> must it fire? (every sf table is one split)
+    cases = [
+        (docs, True),
+        (docs.where("doc_id > 3"), True),
+        (li.groupBy("l_returnflag").agg(F.sum("l_quantity")), False),
+        (li.join(orders.hint("merge"), li.l_orderkey == orders.o_orderkey),
+         False),
+        (orders.join(dim, orders.o_custkey == dim.n_nationkey), True),
+        (ckpt.join(dim, ckpt.o_custkey == dim.n_nationkey), False),
+        (docs.select("doc_id").union(docs.select("doc_id")), 4 <= par),
+        (spark.range(100), False),
+    ]
+
+    rdd_calls = {"n": 0}
+    real_rdd = _cdf.DataFrame.rdd  # a functools.cached_property
+    real_fn = getattr(real_rdd, "func", None) or real_rdd.fget
+
+    @property
+    def counting_rdd(self):
+        rdd_calls["n"] += 1
+        return real_fn(self)
+
+    monkeypatch.setattr(_cdf.DataFrame, "rdd", counting_rdd)
+    sc = spark.sparkContext
+    group = "test-spread-decision"
+    sc.setJobGroup(group, group)
+    try:
+        fired = [spread_narrow_source(df) is not df for df, _ in cases]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert rdd_calls["n"] == 0
+    assert fired == [want for _, want in cases]
+
+
+def test_spread_decision_follows_a_rewritten_table(spark, tmp_path):
+    """The decision is re-read from the current file layout on every
+    call: a one-file table is spread, and after the same path is
+    overwritten with 2x parallelism files the spread is a no-op."""
+    from torcharrow_spark.operators import spread_narrow_source
+
+    par = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "t")
+    rows = spark.range(4 * par).selectExpr("id", "cast(id as string) AS s")
+    rows.coalesce(1).write.parquet(path)
+    one = spark.read.parquet(path)
+    assert spread_narrow_source(one) is not one
+    rows.repartition(2 * par).write.mode("overwrite").parquet(path)
+    many = spark.read.parquet(path)
+    assert spread_narrow_source(many) is many
 
 
 def test_unigram_viterbi_exact_and_tieless():

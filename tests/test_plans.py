@@ -7,22 +7,33 @@ import re
 
 from contextlib import contextmanager
 
+import pytest
+
+from torcharrow_spark.operators import preprocess
 from torcharrow_spark.plans import formatted_plan, plan_stats
 from torcharrow_spark.queries import QUERIES
 
 
-@contextmanager
-def _no_spread(spark):
+@pytest.fixture
+def no_spread(monkeypatch):
     """Pin the ORGANIC-SCALE plan: at a healthy (multi-file) layout
     spread_narrow_source never fires, so zero-exchange pins hold; the
-    bench tables are single-row-group, so tests that assert those
-    shapes disable the spread for the build. The spread exchange
-    itself is pinned by test_spread_narrow_source_plan."""
-    spark.conf.set("spark.torcharrow.spreadNarrowSource", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.torcharrow.spreadNarrowSource", "true")
+    bench tables are single-split, so tests that assert those shapes
+    build inside ``with no_spread():``, which makes the split count
+    report one split per core. The spread exchange itself is pinned
+    by test_spread_narrow_source_plan."""
+
+    @contextmanager
+    def organic():
+        with monkeypatch.context() as m:
+            m.setattr(
+                preprocess,
+                "_scan_splits",
+                lambda df: df.sparkSession.sparkContext.defaultParallelism,
+            )
+            yield
+
+    return organic
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -60,10 +71,10 @@ def test_groupby_is_hash_aggregate(spark, sf_dir):
         assert "SortAggregate" not in text, f"{q} fell back to SortAggregate"
 
 
-def test_narrow_ops_have_no_shuffle(spark, sf_dir):
+def test_narrow_ops_have_no_shuffle(spark, sf_dir, no_spread):
     """Pure projections (text stats, fingerprints) must be scan->project,
     zero exchanges."""
-    with _no_spread(spark):
+    with no_spread():
         for q in ("q24_text_stats", "q25_fingerprint"):
             stats = plan_stats(QUERIES[q](spark, sf_dir))
             assert stats["exchanges"] == 0, (q, stats)
@@ -118,9 +129,9 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_customer_b")
 
 
-def test_text_stats_is_single_projection(spark, sf_dir):
+def test_text_stats_is_single_projection(spark, sf_dir, no_spread):
     """Fused text_stats must plan with zero exchanges (was: two joins)."""
-    with _no_spread(spark):
+    with no_spread():
         stats = plan_stats(QUERIES["q24_text_stats"](spark, sf_dir))
     assert stats["exchanges"] == 0, stats
 
@@ -279,11 +290,11 @@ def test_packing_and_dashboard_windows_are_partitioned(spark, sf_dir):
         "dashboard quantile window lost its source partitioning"
 
 
-def test_gopher_filter_is_zero_shuffle(spark, sf_dir):
+def test_gopher_filter_is_zero_shuffle(spark, sf_dir, no_spread):
     """q128's composite quality gate must plan as scan->project — every
     signal (incl. both repetition fractions) is a per-row HOF, so the
     100 TB filter pass costs exactly one scan."""
-    with _no_spread(spark):
+    with no_spread():
         stats = plan_stats(QUERIES["q128_gopher_filter"](spark, sf_dir))
     assert stats["exchanges"] == 0, stats
 
@@ -334,12 +345,12 @@ def test_ngrams_lambda_reads_bound_array(spark):
     assert plan.count("split(") == 1, plan  # only the bound projection
 
 
-def test_curation_pipeline_plan(spark, sf_dir):
+def test_curation_pipeline_plan(spark, sf_dir, no_spread):
     """q129 composes gate (0 exchanges) + exact dedup (1 hashed-key
     shuffle) + packing (per-shard windows): hash aggregates only, and
     the whole pipeline stays within a handful of exchanges — no stage
     re-reads or re-shuffles the corpus."""
-    with _no_spread(spark):
+    with no_spread():
         text = formatted_plan(QUERIES["q129_curation_pipeline"](spark, sf_dir))
         assert "SortAggregate" not in text
         stats = plan_stats(QUERIES["q129_curation_pipeline"](spark, sf_dir))
@@ -373,7 +384,7 @@ def test_pair_sites_use_bounded_emission(spark, sf_dir):
     assert "posexplode" in text, "q43_jaccard_prefix"
 
 
-def test_shuffle_payloads_are_narrow(spark, sf_dir):
+def test_shuffle_payloads_are_narrow(spark, sf_dir, no_spread):
     """The 100-TB question, checkable: what actually RIDES each
     shuffle. Dedup/pair operators must never put the document text (or
     any wide string) on an exchange — keys are hashed longs, payloads
@@ -382,7 +393,7 @@ def test_shuffle_payloads_are_narrow(spark, sf_dir):
     row where 16 do."""
     from torcharrow_spark.plans import shuffle_payloads
 
-    with _no_spread(spark):
+    with no_spread():
         # exact dedup: every exchange payload is hash halves + bounded
         # aggs
         ex = shuffle_payloads(QUERIES["q18_exact_dedup"](spark, sf_dir))
@@ -399,12 +410,12 @@ def test_shuffle_payloads_are_narrow(spark, sf_dir):
             assert "shingle" not in e["columns"], e
 
 
-def test_curation_pipeline_shuffles_hashes_not_text(spark, sf_dir):
+def test_curation_pipeline_shuffles_hashes_not_text(spark, sf_dir, no_spread):
     """q129 end-to-end: after the zero-shuffle gate, the dedup and
     packing exchanges carry ids, hashes and token counts — the corpus
     text stays in the scan stage and never crosses the network.
 
-    Pinned under ``_no_spread`` like test_shuffle_payloads_are_narrow:
+    Pinned under ``no_spread`` like test_shuffle_payloads_are_narrow:
     on the bench's single-split table the narrow-source spread fires
     and its ROUND-ROBIN exchange moves the source's bytes by design
     (r13: the gate evaluates ABOVE that exchange behind a
@@ -413,7 +424,7 @@ def test_curation_pipeline_shuffles_hashes_not_text(spark, sf_dir):
     ever carries text."""
     from torcharrow_spark.plans import shuffle_payloads
 
-    with _no_spread(spark):
+    with no_spread():
         payloads = shuffle_payloads(
             QUERIES["q129_curation_pipeline"](spark, sf_dir)
         )
@@ -463,23 +474,23 @@ def test_r5_operator_plan_shapes(spark, sf_dir):
     assert "CartesianProduct" not in p3, p3
 
 
-def test_spread_narrow_source_plan(spark, sf_dir):
+def test_spread_narrow_source_plan(spark, sf_dir, no_spread):
     """The r7 narrow-source spread, pinned at the plan level: when it
     fires (single-row-group bench table), the ONLY exchange it adds is
     a ROUND-ROBIN repartition — never a key-ed shuffle, so no skew and
-    no text ever rides a partitioning KEY — and with the conf off the
-    zero-exchange organic shape returns."""
+    no text ever rides a partitioning KEY — and at an organic split
+    count the zero-exchange shape returns."""
     stats = plan_stats(QUERIES["q24_text_stats"](spark, sf_dir))
     assert stats["exchanges"] >= 1, stats  # fires on the 1-row-group table
     text = formatted_plan(QUERIES["q24_text_stats"](spark, sf_dir))
     assert "RoundRobinPartitioning" in text
     assert "hashpartitioning(text" not in text.lower()
-    with _no_spread(spark):
+    with no_spread():
         stats_off = plan_stats(QUERIES["q24_text_stats"](spark, sf_dir))
     assert stats_off["exchanges"] == 0, stats_off
 
 
-def test_pushdown_barrier_keeps_gate_above_spread(spark, sf_dir):
+def test_pushdown_barrier_keeps_gate_above_spread(spark, sf_dir, no_spread):
     """r13-s2: a consumer's ``.where(keep)`` over gopher_filter must
     NOT sink below the narrow-source spread into the single-split scan
     (measured 1.86 s single-threaded vs 0.35 s parallel at sf0.1).
@@ -511,7 +522,7 @@ def test_pushdown_barrier_keeps_gate_above_spread(spark, sf_dir):
     m = re.search(r"DataFilters: \[([^\n]*)\]", text)
     assert m is None or "CASE WHEN" not in m.group(1), m.group(0)[:500]
     rows = sorted(r.doc_id for r in gated.collect())
-    with _no_spread(spark):
+    with no_spread():
         plain = gate()
         assert "CollectMetrics" not in formatted_plan(plain)
         rows_off = sorted(r.doc_id for r in plain.collect())

@@ -321,37 +321,6 @@ def test_scan_handle_cache_is_metadata_only(spark, tmp_path):
     assert len(Q._SCAN_HANDLES) == 2
 
 
-def test_spread_decision_cache_skips_repeat_probe(spark, monkeypatch):
-    """r13: spread_narrow_source memoizes its split-count decision per
-    normalized plan — the df.rdd probe (~0.45 s of driver-side physical
-    planning) must run at most once per plan shape per session."""
-    from pyspark.sql.classic import dataframe as _cdf
-
-    from torcharrow_spark.operators import preprocess as P
-
-    P._SPREAD_DECISIONS.clear()
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    calls = {"n": 0}
-    real_rdd = _cdf.DataFrame.rdd  # a functools.cached_property
-    real_fn = getattr(real_rdd, "func", None) or real_rdd.fget
-
-    @property
-    def counting_rdd(self):
-        calls["n"] += 1
-        return real_fn(self)
-
-    monkeypatch.setattr(_cdf.DataFrame, "rdd", counting_rdd)
-    r1 = P.spread_narrow_source(df)
-    n_after_first = calls["n"]
-    r2 = P.spread_narrow_source(df)
-    assert calls["n"] == n_after_first  # no second probe
-    # identical decision both times
-    assert (
-        ("Repartition" in r1._jdf.queryExecution().logical().toString())
-        == ("Repartition" in r2._jdf.queryExecution().logical().toString())
-    )
-
-
 def _logreg_train_ref(df, feature_cols, label_col, lr=1.0, iters=3):
     """pre-r13 Column-API training loop, verbatim."""
     from torcharrow_spark.operators.classifier import _margin

@@ -123,28 +123,6 @@ def test_simhash_clamp_bounds_cannot_drift():
     assert live in dedup.simhash_auto_bits.__doc__
 
 
-def test_spread_conf_gates(spark, sf_dir):
-    """The r7 session conf must actually switch the spread off: same
-    narrow source, conf true -> widened, conf false -> untouched."""
-    from torcharrow_spark.operators import spread_narrow_source
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    par = spark.sparkContext.defaultParallelism
-    base_parts = docs.rdd.getNumPartitions()
-    if base_parts * 2 > par:
-        import pytest
-
-        pytest.skip("source not narrow on this layout")
-    assert spread_narrow_source(docs).rdd.getNumPartitions() == par
-    spark.conf.set("spark.torcharrow.spreadNarrowSource", "false")
-    try:
-        assert (
-            spread_narrow_source(docs).rdd.getNumPartitions() == base_parts
-        )
-    finally:
-        spark.conf.set("spark.torcharrow.spreadNarrowSource", "true")
-
-
 def test_reliable_lineage_cut_conf(spark, tmp_path):
     """r13 (VERDICT r12 ask #5): lineage_cut must honor a configured
     checkpoint directory — localCheckpoint by default, reliable

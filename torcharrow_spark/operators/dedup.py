@@ -831,7 +831,7 @@ def _shingles(df: SDF, text_col: str, id_col: str, k: int) -> SDF:
       the sf40 3.3 GB map-sort spill, previously a hand-set
       maxPartitionBytes in tuning.py, now default engine behavior —
       zero new exchanges, bit-identical shuffle bytes);
-    * single-row-group sources: spread so the scan-fused compute isn't
+    * single-split sources: spread so the scan-fused compute isn't
       serialized into one task (preprocess.spread_narrow_source)."""
     from torcharrow_spark.operators.preprocess import (
         cap_amplified_scan,

@@ -17,10 +17,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
-#: per-session memo of spread decisions keyed on the normalized plan
-#: string (see the r13 comment inside spread_narrow_source).
-_SPREAD_DECISIONS: dict = {}
-
 #: monotonically unique suffix for pushdown_barrier metric names (the
 #: analyzer requires observed-metrics names to be unique per query
 #: unless the subtrees are identical, which reused DataFrames are).
@@ -56,101 +52,74 @@ def pushdown_barrier(df: SDF) -> SDF:
     )
 
 
+def _scan_splits(df: SDF) -> int | None:
+    """Spark's planned split count for the file scans that set ``df``'s
+    output partitioning, or None when anything else sets it. Walks the
+    pre-``EnsureRequirements`` physical plan (``sparkPlan``), which is
+    planning only, and reads each scan's ``inputRDD`` partitions:
+    Spark's own byte-packed file splits, counted without a job.
+
+    The walk follows the child that decides the partitioning: a
+    one-child operator that requires no child distribution passes
+    through, a broadcast join passes to its streamed side, and a union
+    sums its children. It stops at an exchange, at any operator with a
+    required child distribution (aggregate, shuffled join, window,
+    global sort or limit) and at any leaf that is not a file scan
+    (in-memory rows, a range, a checkpointed RDD)."""
+
+    def splits(node):
+        name = node.getClass().getSimpleName()
+        kids = node.children()
+        if name in ("FileSourceScanExec", "BatchScanExec"):
+            return node.inputRDD().getNumPartitions()
+        if name == "UnionExec":
+            parts = [splits(kids.apply(i)) for i in range(kids.size())]
+            return None if None in parts else sum(parts)
+        if name in ("BroadcastHashJoinExec", "BroadcastNestedLoopJoinExec"):
+            build_left = "BuildLeft" in node.buildSide().toString()
+            return splits(node.right() if build_left else node.left())
+        if (
+            kids.size() == 1
+            and "Exchange" not in name
+            and node.requiredChildDistribution().head().toString()
+            == "UnspecifiedDistribution"
+        ):
+            return splits(kids.apply(0))
+        return None
+
+    try:
+        return splits(df._jdf.queryExecution().sparkPlan())
+    except Exception:
+        return None
+
+
 def spread_narrow_source(df: SDF) -> SDF:
     """Widen a NARROW file-backed plan before compute-heavy per-row
-    work (r7). A parquet scan parallelizes at best one task per row
-    group, so a single-file/single-row-group source (a vendor's
-    one-file dump, a small-SF bench table) runs everything fused into
-    the scan — shingling, hashing, decode — in ONE task while the rest
-    of the cluster idles: measured at sf0.1 (one row group), widening
-    cut minhash 48%, simhash 41%, span-stripping 56% wall.
+    work (r7). A file scan runs one task per planned split, so a small
+    single-file source (a vendor's one-file dump, a small-SF bench
+    table) runs everything fused into the scan — shingling, hashing,
+    decode — in ONE task while the rest of the cluster idles: measured
+    at sf0.1, widening cut minhash 48%, simhash 41%, span-stripping 56%
+    wall.
 
-    The widening is ADAPTIVE, keyed on what the plan already shows:
-    a no-op unless the df is (a) still scan-shaped and file-backed
-    (a FileScan leaf and no Exchange in the pre-AQE physical plan —
-    a post-shuffle df is already spread; ``sparkPlan`` is
-    planning-only, safe to inspect, never executes), and (b) narrow
-    in its ACTUAL planned scan splits — ``df.rdd.getNumPartitions()``,
-    which counts row-group/maxPartitionBytes splits, not files, so a
-    healthy 100 GB single file with ~800 row groups is correctly left
-    alone (r7 review: a file-count test would have exchanged all
-    100 GB to save nothing) and a million-file organic table never
-    materializes its path list on the driver. Narrow = the scan uses
-    at most half the cluster's parallelism; the widening fires down
-    to 2-core clusters. When it fires it pays one exchange of the
-    source's bytes — exactly the trade a single-row-group vendor dump
-    wants, and invisible at any healthy layout. Disable with the
-    session conf ``spark.torcharrow.spreadNarrowSource=false`` (the
-    plan-pin tests do, to pin the organic-scale zero-exchange shapes;
-    the spread exchange itself is pinned by its own test as a
-    ROUND-ROBIN repartition — never a key-ed shuffle, so no skew and
-    no text ever rides a partitioning KEY).
+    The decision is read from the physical plan (`_scan_splits`), with
+    no job, no memo and no conf: it fires iff the file scans that set
+    ``df``'s partitioning plan at most half the cluster's parallelism
+    in Spark's byte-packed file splits. A broadcast join follows its
+    streamed side, so a narrow probe scan under a broadcast join is
+    spread; anything already partitioned by an exchange, an aggregate
+    or a shuffled join, and any in-memory or checkpointed source, is
+    left alone. Splits, not files, are counted, so a healthy 100 GB
+    single file is never exchanged. When it fires it pays one
+    ROUND-ROBIN exchange of the source's bytes — never a key-ed
+    shuffle, so no skew and no text ever rides a partitioning KEY.
 
-    Exchange matching (r8, ADVICE r7): "already spread" means a SHUFFLE
-    exchange — ``Exchange hashpartitioning/rangepartitioning/
-    RoundRobinPartitioning/SinglePartition`` — not the bare substring
-    "Exchange", which also matched ``BroadcastExchange``. Plans whose
-    only exchange IS a broadcast (a broadcast-joined filter over a
-    still-narrow probe scan) are INTENTIONALLY left unspread, now as a
-    documented decision rather than a substring accident: probing
-    their split count (`df.rdd`) would fire the broadcast-side job at
-    PLANNING time — a side effect this helper's no-op guarantee
-    forbids — and none of this engine's heavy per-row operators put
-    compute after a broadcast join without an aggregation (which
-    spreads on its own shuffle) in between. An operator that does can
-    repartition explicitly before the heavy projection."""
-    import re
-
-    try:
-        if (
-            df.sparkSession.conf.get(
-                "spark.torcharrow.spreadNarrowSource", "true"
-            ).lower() != "true"
-        ):
-            return df
-        plan = df._jdf.queryExecution().sparkPlan().toString()
-    except Exception:
-        return df
-    shuffle_exchange = re.search(
-        r"Exchange (hashpartitioning|rangepartitioning"
-        r"|RoundRobinPartitioning|SinglePartition)",
-        plan,
-    )
-    if (
-        shuffle_exchange
-        or "BroadcastExchange" in plan  # documented skip, see docstring
-        or not ("FileScan" in plan or "BatchScan" in plan)
-    ):
-        return df
+    The call stays at the compute-heavy sites rather than in the
+    reader: it was measured-REVERTED where payload bytes dominate
+    compute (audio/video metadata walks: 1.75x worse spread)."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    # r13 (guide §5.4): the split-count probe below costs ~0.45 s of
-    # DRIVER time per call (df.rdd materializes the full physical plan
-    # and its partition packing), paid by every text_stats/dedup build
-    # inside the bench's timed region. The decision is a pure function
-    # of (plan shape, file layout, parallelism), so memoize it per
-    # session keyed on the expr-id-normalized plan string — the plan
-    # text embeds the file listing and pushed filters, and the same
-    # normalized scan over immutable files always packs into the same
-    # splits. Metadata only (a bool per plan shape); no rows are cached.
-    try:
-        app_id = df.sparkSession.sparkContext.applicationId
-    except Exception:
-        app_id = None
-    key = (app_id, par, re.sub(r"#\d+", "#x", plan))
-    cached = _SPREAD_DECISIONS.get(key)
-    if cached is not None:
-        return df.repartition(par) if cached else df
-    try:
-        # safe here: the plan has no Exchange, so converting to an RDD
-        # plans the scan splits without executing any query stage
-        nparts = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    spread = nparts * 2 <= par
-    if len(_SPREAD_DECISIONS) > 512:
-        _SPREAD_DECISIONS.clear()
-    _SPREAD_DECISIONS[key] = spread
-    if not spread:
+    splits = _scan_splits(df)
+    if splits is None or splits * 2 > par:
         return df
     return df.repartition(par)
 
@@ -314,8 +283,8 @@ def _scan_session(parent, max_partition_bytes: int):
         child = parent.newSession()
         cache[max_partition_bytes] = child
     # refresh runtime confs on EVERY call (not just creation): a parent
-    # conf changed after the child was cached (a test flipping
-    # spreadNarrowSource, a user retuning shuffle width) must be seen
+    # conf changed after the child was cached (a user retuning shuffle
+    # width or the session time zone) must be seen
     # by plans built through the child; driver-only, ~ms
     for row in parent.sql("SET").collect():
         try:
@@ -379,18 +348,13 @@ def cap_amplified_scan(
       planned split, so small-scale plans and their byte anchors are
       untouched);
     * the session conf already set at/below the cap (the operator
-      respects a stricter manual setting);
-    * kill switch: ``spark.torcharrow.amplifiedScanCap=false``.
+      respects a stricter manual setting).
+
+    The split count comes from `_scan_splits`, the same job-free plan
+    walk the narrow-source spread uses.
     """
     spark = df.sparkSession
     try:
-        if (
-            spark.conf.get(
-                "spark.torcharrow.amplifiedScanCap", "true"
-            ).lower()
-            != "true"
-        ):
-            return df
         budget = (
             rows_budget if rows_budget is not None
             else AMPLIFIED_SORT_ROWS_BUDGET
@@ -406,7 +370,9 @@ def cap_amplified_scan(
         if scan is None:
             return df
         paths, total_bytes = scan
-        nparts = df.rdd.getNumPartitions()
+        nparts = _scan_splits(df)
+        if nparts is None:
+            return df
         eff_split = total_bytes / max(nparts, 1)
         if eff_split <= cap * 1.25:
             return df

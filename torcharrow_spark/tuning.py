@@ -1,12 +1,12 @@
 """The 100-TB operator surface: every conf and threshold this engine
 owns, in one place (r8, VERDICT r7 ask #8).
 
-r7 added a session conf (``spark.torcharrow.spreadNarrowSource``) and
-earlier rounds buried election, salting, auto-sizing and AQE-pinning
+Earlier rounds buried election, salting, auto-sizing and AQE-pinning
 thresholds in module constants; an operator running this engine on a
 real cluster had to read source to find the knobs. This module is the
-ops page: each entry names the knob, where it lives, its default, the
-measured trade behind the default, and the kill switch / override.
+ops page: each entry names the knob or behavior, where it lives, its
+default, the measured trade behind the default, and the kill switch /
+override.
 ``REGISTRY`` is data (used by the docs test, printable by
 ``describe()``); the defaults are imported from their owning modules,
 so this page can never drift from the code.
@@ -48,31 +48,35 @@ from .operators import webextract as _webextract
 REGISTRY: list[dict] = [
     {
         "name": "narrow-source spreading",
-        "kind": "session-conf",
-        "location": "spark.torcharrow.spreadNarrowSource",
-        "default": "true",
+        "kind": "operational",
+        "location": "operators.preprocess.spread_narrow_source",
+        "default": "on at every compute-heavy call site",
         "effect": (
             "Before scan-fused heavy per-row compute (shingling, "
-            "hashing, decode), a still-scan-shaped file source whose "
-            "planned splits use <= half the cluster's parallelism is "
-            "widened by ONE round-robin exchange "
-            "(operators.preprocess.spread_narrow_source)."
+            "hashing, decode), a plan whose partitioning is set by "
+            "file scans planning <= half the cluster's parallelism in "
+            "Spark's byte-packed file splits is widened by ONE "
+            "round-robin exchange. The decision walks the physical "
+            "plan: a broadcast join follows its streamed side, a "
+            "union sums its children; an exchange, aggregate, "
+            "shuffled join, window, global sort or limit, or an "
+            "in-memory / checkpointed source leaves the plan alone. "
+            "Planning only: no job, no memo."
         ),
         "trade": (
             "sf0.1 single-row-group tables: minhash -33%, text stats "
             "-37%, span-strip -41% wall for one exchange of the "
             "source's bytes; measured-REVERTED where payload bytes "
             "dominate compute (audio/video metadata walks: 1.75x "
-            "worse spread). No-op at any healthy multi-row-group "
-            "layout, so 100-TB plans carry zero of these bytes. "
-            "Broadcast-join-shaped inputs are intentionally left "
-            "unspread (probing their splits would fire the broadcast "
-            "job at planning time)."
+            "worse spread), which is why the decision sits at the "
+            "compute-heavy call sites and not in the reader. No-op "
+            "at any healthy multi-split layout, so 100-TB plans "
+            "carry zero of these bytes."
         ),
         "override": (
-            "spark.conf.set('spark.torcharrow.spreadNarrowSource', "
-            "'false') — plan-pin tests do this to pin the organic "
-            "zero-exchange shapes."
+            "None: the decision follows the file layout and "
+            "defaultParallelism; an operator that must not spread "
+            "does not call it."
         ),
     },
     {
@@ -352,10 +356,9 @@ REGISTRY: list[dict] = [
             "plans and their byte anchors never change."
         ),
         "override": (
-            "Kill switch spark.torcharrow.amplifiedScanCap=false; a "
-            "session maxPartitionBytes set STRICTER than the cap is "
-            "always respected; per-call rows_budget= for operators "
-            "with different fanout density."
+            "A session maxPartitionBytes set STRICTER than the cap "
+            "is always respected; per-call rows_budget= for "
+            "operators with different fanout density."
         ),
     },
     {
